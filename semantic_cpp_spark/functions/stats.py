@@ -13,7 +13,9 @@ All builders return Column aggregate expressions usable in ``df.agg`` /
 
 from __future__ import annotations
 
-from pyspark.sql import Column, Window
+from bisect import bisect_right
+
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -124,35 +126,59 @@ def percentiles_exact_sorted(df, col: Column, ps: list[float], names: list[str])
     path for the exact contract. `F.percentile` is algebraically partial
     but its final merge sorts every distinct value on ONE reducer
     (measured: parallelizing the partial phase doesn't move the ~1.7 s
-    floor on 600k rows because the merge dominates). Here (r16, guide
-    §2.3) the column is bucketed by frozen percentile_approx boundary
-    literals (monotone in value order), ONE exact per-bucket histogram
-    locates each needed global rank's (bucket, local offset) on the
-    driver, and the final job sorts ONLY the buckets containing a
-    needed rank — the full column is never shuffled, and only the
-    ≤2·len(ps) boundary rows feed the 1-row interpolation aggregate.
-    (The r15 shape ranked EVERY row through with_ordinal's range sort;
-    it remains the fallback for degenerate boundary sets.)
+    floor on 600k rows because the merge dominates).
+
+    Only ≤ 2·len(ps) global ranks are ever read, so the column is
+    bucketed by ``indexing.quantile_buckets`` (one single-stage probe for
+    the count and bounds, one exact histogram → per-bucket offsets), the
+    driver locates the buckets holding a needed rank, and the final job
+    ranks ONLY those buckets — the full column is never shuffled, and
+    only the needed rows feed the 1-row interpolation aggregate. Bucket
+    order is consistent with value order and ties carry equal values, so
+    every tie order yields the same value at a rank. A nondeterministic
+    input, or a histogram that does not sum to the probed count, takes
+    the full-ordinal path instead: every row ranked over one persisted
+    sampled range partitioning, with the count taken from it.
 
     Same linear-interpolation rule as `F.percentile` / DuckDB
     quantile_cont (rank p·(n−1), collector.h:2279-2335), pinned by a
     cross-implementation test. ps are fractions in [0, 1]. Returns a
     1-row DataFrame with `names` columns (null when the input is empty).
     """
-    from semantic_cpp_spark.indexing import with_ordinal
+    from semantic_cpp_spark.indexing import (
+        ConservationError,
+        bucket_ordinal,
+        is_deterministic,
+        quantile_buckets,
+        with_ordinal,
+    )
 
     if len(ps) != len(names):
         raise ValueError("ps and names must align")
     if not ps:
         # zero percentiles: a 0-column select is legal downstream but the
-        # isin() rank filter below would throw — short-circuit (ADVICE r3)
+        # isin() rank filter below would throw
         return df.sparkSession.range(1).select()
     for p in ps:
         if not 0.0 <= p <= 1.0:
             raise ValueError("percentile fraction must be in [0, 1]")
     vals = df.select(col.alias("__v")).filter(col.isNotNull())
-    n = vals.count()
     spark = df.sparkSession
+    qb = None
+    if is_deterministic(vals):
+        try:
+            qb = quantile_buckets(
+                vals, "__v", max(spark.sparkContext.defaultParallelism, 2)
+            )
+        except ConservationError:
+            pass
+    if qb is None:
+        # a Column key (not the name) takes with_ordinal's persisted
+        # sampled range path, so the ranks and n come from one evaluation
+        ranked = with_ordinal(vals, [F.col("__v")], name="__r", strategy="range")
+        n = ranked.count()
+    else:
+        n = qb[1][-1]
     if n == 0:
         return spark.range(1).select(
             *[F.lit(None).cast("double").alias(nm) for nm in names]
@@ -164,104 +190,26 @@ def percentiles_exact_sorted(df, col: Column, ps: list[float], names: list[str])
         lo, hi = int(r // 1), -int(-r // 1)
         bounds.append((lo, hi, r - lo))
         need.update((lo, hi))
-
-    # r16 (guide §2.3 — shuffle fewer bytes): only len(need) <= 2·len(ps)
-    # GLOBAL RANKS are ever read, so ranking every row was waste. Bucket
-    # the column by frozen percentile_approx boundaries (the same
-    # monotone-coarsening scheme as indexing.with_ordinal's r16 range
-    # path: bucket = #bounds <= value, null -> 0, NaN -> last — a pure
-    # deterministic row function), take ONE exact per-bucket histogram,
-    # locate each needed rank's bucket + local offset on the driver
-    # (<= nb rows), and sort ONLY the buckets that contain a needed
-    # rank: the final job filters to ~len(need)/nb of the rows before
-    # its exchange and the full column is never shuffled. Values at the
-    # selected global ranks are identical to the full-ordinal path
-    # (bucket order is consistent with value order; within-bucket ties
-    # carry equal __v, so any tie order yields the same value at a
-    # rank). Degenerate boundary sets (constant column, all-null probe)
-    # fall back to the full ordinal sort.
-    nb = max(spark.sparkContext.defaultParallelism, 2)
-    brow = vals.agg(
-        F.percentile_approx(
-            F.col("__v").cast("double"),
-            F.array(*[F.lit(i / nb) for i in range(1, nb)]),
-            F.lit(1000),
-        ).alias("__b")
-    ).first()
-    qb = sorted({b for b in (brow["__b"] or []) if b is not None and b == b})
-    if qb:
-        kd = F.col("__v").cast("double")
-        terms = [
-            F.when(kd >= F.lit(float(b)), F.lit(1)).otherwise(F.lit(0))
-            for b in qb
-        ]
-        bexpr = sum(terms[1:], terms[0]).cast("long")
-        hist = {
-            r["__bk"]: r["__c"]
-            for r in vals.groupBy(bexpr.alias("__bk"))
-            .agg(F.count(F.lit(1)).alias("__c"))
-            .collect()
-        }
-        offsets: dict[int, int] = {}
-        acc = 0
-        for bk in sorted(hist):
-            offsets[bk] = acc
-            acc += hist[bk]
-        # (bucket, local_rank) for every needed global rank
-        targets: dict[int, tuple[int, int]] = {}
-        for r in need:
-            bk = max(b for b in offsets if offsets[b] <= r)
-            targets[r] = (bk, r - offsets[bk])
-        hit_buckets = sorted({bk for bk, _ in targets.values()})
-        sel = vals.withColumn("__bk", bexpr).filter(
-            F.col("__bk").isin(*[F.lit(b) for b in hit_buckets])
-        )
-        w = Window.partitionBy("__bk").orderBy("__v")
-        ranked_local = sel.withColumn("__lr", F.row_number().over(w) - 1)
-        conds = [
-            (F.col("__bk") == F.lit(bk)) & (F.col("__lr") == F.lit(lr))
-            for bk, lr in set(targets.values())
-        ]
-        pred = conds[0]
-        for c in conds[1:]:
-            pred = pred | c
-        picked_rows = ranked_local.filter(pred)
-        aggs = []
-        for i, (lo, hi, _) in enumerate(bounds):
-            lo_bk, lo_lr = targets[lo]
-            hi_bk, hi_lr = targets[hi]
-            aggs.append(
-                F.min(
-                    F.when(
-                        (F.col("__bk") == lo_bk) & (F.col("__lr") == lo_lr),
-                        F.col("__v"),
-                    )
-                ).alias(f"__lo{i}")
-            )
-            aggs.append(
-                F.min(
-                    F.when(
-                        (F.col("__bk") == hi_bk) & (F.col("__lr") == hi_lr),
-                        F.col("__v"),
-                    )
-                ).alias(f"__hi{i}")
-            )
-        picked = picked_rows.agg(*aggs)
-    else:
-        ranked = with_ordinal(vals, ["__v"], name="__r", strategy="range")
-        sel = ranked.filter(F.col("__r").isin(*[F.lit(x) for x in need]))
-        aggs = []
-        for i, (lo, hi, _) in enumerate(bounds):
-            aggs.append(
-                F.min(F.when(F.col("__r") == lo, F.col("__v"))).alias(f"__lo{i}")
-            )
-            aggs.append(
-                F.min(F.when(F.col("__r") == hi, F.col("__v"))).alias(f"__hi{i}")
-            )
-        picked = sel.agg(*aggs)
+    if qb is not None:
+        bucket, offsets = qb
+        # the bucket of global rank r is the last one starting at or below
+        # r (an empty bucket shares its start with the next one)
+        hits = sorted({bisect_right(offsets, r) - 1 for r in need})
+        ranked = bucket_ordinal(vals, bucket, offsets, [F.col("__v")], "__r", hits)
+    aggs = []
+    for i, (lo, hi, _) in enumerate(bounds):
+        for tag, rank in (("lo", lo), ("hi", hi)):
+            pick = F.when(F.col("__r") == rank, F.col("__v"))
+            aggs.append(F.min(pick).alias(f"__{tag}{i}"))
+    picked = ranked.filter(F.col("__r").isin(*need)).agg(*aggs)
     outs = []
     for i, (_, _, frac) in enumerate(bounds):
-        v = F.col(f"__lo{i}") + F.lit(frac) * (F.col(f"__hi{i}") - F.col(f"__lo{i}"))
+        # lo·(1−d) + hi·d, DuckDB quantile_cont's arithmetic: lo + d·(hi−lo)
+        # differs from it in the last bit (717034429784.5 vs …784.4999 on
+        # one fixture), enough to flip a 6-decimal rounding. An exact rank
+        # returns its value as is, so an infinite one never meets 0·inf.
+        lo, hi = F.col(f"__lo{i}"), F.col(f"__hi{i}")
+        v = lo if frac == 0 else lo * (F.lit(1.0) - F.lit(frac)) + hi * F.lit(frac)
         outs.append(v.alias(names[i]))
     return picked.select(*outs)
 
@@ -331,6 +279,19 @@ def ratio_round6(num: Column, den: Column) -> Column:
     x = F.lit(2_000_000).cast("long") * num.cast("long") + den.cast("long")
     y = F.lit(2).cast("long") * den.cast("long")
     return div_long(x, y) / F.lit(1000000.0)
+
+
+def round6_scaled(x: Column) -> Column:
+    """round(x, 6) for a DOUBLE, computed as ``round(x·10⁶, 0) / 10⁶`` in
+    double arithmetic — the scaled form DuckDB's round(double, 6) uses.
+    Spark's round(double, 6) instead applies HALF_UP to the shortest
+    decimal string of x, so the two disagree when x is stored just below
+    a half: 17102.8889555 prints as such and rounds to …956, while the
+    scaled product 17102888955.499998 rounds to …955. At scale 0 both
+    engines agree (below 2⁵² the shortest string of a double and its
+    exact value lie on the same side of every half), so this form
+    matches DuckDB on every input."""
+    return F.round(x * F.lit(1e6), 0) / F.lit(1e6)
 
 
 def div_long(x: Column, y: Column) -> Column:

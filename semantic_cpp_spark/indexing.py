@@ -8,21 +8,32 @@ carries it as a LongType column ``__idx``, dense 0..n-1 at every re-based
 boundary.
 
 Scale design (SURVEY.md §7 hard-part 1): a global ``row_number()`` window
-funnels all rows through ONE task — unusable at 100 TB. Two scalable
-strategies, both the classic zipWithIndex scheme (per-split counts →
-cumulative offsets → local rank + offset) in pure DataFrame ops — no RDD
-round-trip, no Python serialization, every row produced once:
+funnels all rows through ONE task — unusable at 100 TB. Every scalable
+strategy is the zipWithIndex scheme (split rows into ordered buckets →
+per-bucket counts → cumulative offsets → local rank + offset) in pure
+DataFrame ops — no RDD round-trip, no Python serialization:
 
-- "bucket" (preferred, fully deterministic): requires a single NUMERIC
-  total-order key. Split = the logical bucket ``floor(key / width)`` —
-  derived from DATA, not physical partitioning, so the per-bucket counts
-  job and the final job agree by construction with no caching. One shuffle
-  (hash by bucket) + a broadcast of the tiny offsets table.
+- dense integer key (``auto``): one single-stage probe finds ``key - min``
+  is already the ordinal — a pure narrow map, nothing shuffles.
 
-- "range": arbitrary (possibly compound / non-numeric) sort keys.
-  ``repartitionByRange`` orders the physical partitions; per-partition
-  counts become offsets. The partitioned input is persisted so both jobs
-  see identical splits (range sampling is not contractually deterministic).
+- "bucket" (integer key): bucket = ``floor(key / width)``, derived from
+  data, so the per-bucket counts and the final ranks agree without
+  caching. Offsets are computed lazily in the sink job (counts exchange +
+  offsets window over the tiny counts table + broadcast join), because
+  bucket ids are unbounded.
+
+- "range", named ascending numeric leading key: ``quantile_buckets`` —
+  the one quantile-bucket primitive, shared with
+  ``stats.percentiles_exact_sorted``. One single-stage probe (row count
+  plus ``percentile_approx`` bounds) freezes the bounds into a
+  ``#bounds <= key`` bucket expression, and one exact histogram gives the
+  offsets on the driver. The sink job then only hash-partitions by bucket
+  and adds a LITERAL offset (``element_at(array(offsets), bucket + 1)``)
+  to the local rank — no counts exchange, no offsets window, no join.
+
+- "range", any other key, or any input whose analysed plan is
+  nondeterministic: ``repartitionByRange`` buckets, pinned by a persist
+  so every job sees the same rows and splits; offsets as for "bucket".
 
 Determinism requires the order key to be a TOTAL order (unique); all engine
 sources guarantee one (event_id, doc_id, ... or an explicit position).
@@ -30,9 +41,10 @@ sources guarantee one (event_id, doc_id, ... or an explicit position).
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Iterable, Union
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
@@ -41,20 +53,20 @@ IDX = "__idx"
 _PID = "__sem_pid"
 _OFF = "__sem_off"
 
-# density-probe memo: (semanticHash, input-file-snapshot hash, key) →
-# (lo, n, dense). The auto strategy's probe is an eager aggregate per
-# with_ordinal call; chained re-basing ops would otherwise re-scan the key
-# column at every plan-construction step. semanticHash identifies the
-# logical plan and the file-snapshot hash ties it to the data listing, so
-# a re-read after append/overwrite misses the memo instead of serving
-# stale density. Bounded FIFO so long sessions can't grow it unboundedly.
-_PROBE_CACHE: dict[tuple[int, int, str], tuple[int, int, bool]] = {}
+# probe memo: (semanticHash, input-file-snapshot hash, tag) → probe result
+# (density (lo, n, dense) or quantile buckets). Chained re-basing ops would
+# otherwise re-run the eager probe at every plan-construction step.
+# semanticHash identifies the logical plan and the file-snapshot hash ties
+# it to the data listing, so a re-read after append/overwrite misses the
+# memo instead of serving stale results. Bounded FIFO so long sessions
+# can't grow it unboundedly.
+_PROBE_CACHE: dict[tuple, object] = {}
 _PROBE_CACHE_MAX = 512
 
-# range-strategy persists outstanding in this session (advisor r1: these
-# leaked). Lifetime must span every materialisation of the result plan —
-# laziness makes the "right" unpersist moment unknowable — so we register
-# them and let callers flush at natural boundaries.
+# range-strategy persists outstanding in this session. Their lifetime must
+# span every materialisation of the result plan — laziness makes the
+# "right" unpersist moment unknowable — so they are registered here and
+# callers flush them at natural boundaries.
 _PERSISTED: list = []
 
 # range-strategy persist memo: (semanticHash, file-snapshot hash, keys, n)
@@ -93,25 +105,141 @@ def release_ordinal_caches() -> int:
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
-# types the deterministic quantile-bounds range path accepts: anything
-# whose cast to double is a monotone (possibly non-strict) map — equal-
-# after-cast keys just share a bucket and the local window orders them
-# by the TRUE key, so lossy casts (int64 > 2^53, high-precision
-# decimals) stay correct.
+# types the quantile-bucket range path accepts: anything whose cast to
+# double is a monotone (possibly non-strict) map — equal-after-cast keys
+# just share a bucket and the local window orders them by the TRUE key, so
+# lossy casts (int64 > 2^53, high-precision decimals) stay correct.
 _QNUMERIC = _NUMERIC + (T.FloatType, T.DoubleType, T.DecimalType)
 
 ColumnOrName = Union[Column, str]
+
+
+class ConservationError(RuntimeError):
+    """A bucket histogram does not account for every probed row."""
 
 
 def _cols(order_by: Iterable[ColumnOrName]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_by]
 
 
-def _leading_numeric_key(df: DataFrame, order_by: list[ColumnOrName]) -> str | None:
-    """Name of the LEADING integer-like order column (works for compound
-    keys too: bucketing on the first column is a coarser monotone function
-    of the lexicographic key — equal leading values share a bucket, and
-    the local window orders by the full key)."""
+def _plan_key(df: DataFrame) -> tuple[int, int]:
+    return (
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        hash(tuple(sorted(df.inputFiles()))),
+    )
+
+
+def _memo(df: DataFrame, tag, compute, memoize: bool = True):
+    """``compute()`` memoised in _PROBE_CACHE per (logical plan, file
+    snapshot, tag)."""
+    key = _plan_key(df) + (tag,)
+    hit = _PROBE_CACHE.get(key) if memoize else None
+    if hit is None:
+        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
+            _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
+        hit = _PROBE_CACHE[key] = compute()
+    return hit
+
+
+def is_deterministic(df: DataFrame) -> bool:
+    """Whether every evaluation of ``df``'s analysed plan yields the same
+    rows — the precondition for probing a plan in one job and ranking it
+    in another. Persisted intermediates count as pinned: the check runs
+    on the analysed plan with cached data substituted."""
+    return df._jdf.queryExecution().withCachedData().deterministic()
+
+
+def eager_aggregate(df: DataFrame, *aggs: Column) -> dict:
+    """Evaluate global aggregates over ``df`` in ONE single-stage job.
+
+    ``df.agg(...).first()`` costs a shuffle-map job plus a result job;
+    here the aggregates ride a ``noop`` write as an ``Observation``, so
+    each task folds its rows into the partial buffers and the driver
+    merges them — no exchange. Returns ``{alias: value}``; an empty input
+    gives 0 for counts and null for every other aggregate. Prune ``df`` to
+    the aggregated columns first: the noop sink reads every column."""
+    obs = Observation()
+    df.observe(obs, *aggs).write.format("noop").mode("overwrite").save()
+    return obs.get
+
+
+def quantile_buckets(df: DataFrame, key: str, nb: int) -> tuple[Column, list[int]]:
+    """The one quantile-bucket primitive: ``(bucket, offsets)`` for the
+    numeric column ``key``.
+
+    One ``eager_aggregate`` probe takes the row count and ``nb``-quantile
+    ``percentile_approx`` bounds; the bounds are frozen into ``bucket =
+    #bounds <= key`` — a pure deterministic row function, non-strictly
+    monotone in ascending key order (null → 0, i.e. nulls first; NaN ≥
+    every bound → last bucket, i.e. NaN last). Bounds only balance the
+    buckets: skew or a degenerate column (all null, constant) costs
+    balance, never values. One exact histogram then yields ``offsets``:
+    ``offsets[b]`` rows sit in buckets below ``b``, ``offsets[-1]`` is the
+    row count. Raises ``ConservationError`` when the histogram does not
+    sum to the probed count, so no caller ranks against stale offsets.
+    ``df`` must be deterministic (``is_deterministic``)."""
+    kd = F.col(key).cast("double")
+    probe = eager_aggregate(
+        df.select(key),
+        F.count(F.lit(1)).alias("n"),
+        # percentile_approx runs as a codegen aggregate; accuracy 1000
+        # bounds the sketch. Nulls are ignored by the sketch; NaN bounds
+        # are dropped (a NaN bound would act as +inf anyway).
+        F.percentile_approx(
+            kd, F.array(*[F.lit(i / nb) for i in range(1, nb)]), F.lit(1000)
+        ).alias("b"),
+    )
+    bounds = sorted({b for b in probe["b"] or [] if b is not None and b == b})
+    # a comparison-sum chain, not filter(array, lambda): the higher-order
+    # function trips an optimizer INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when
+    # the grouping expression is collapsed into a downstream aggregate
+    # (Spark 4.1), and per-term when() stays codegen-able arithmetic.
+    terms = [
+        F.when(kd >= F.lit(float(b)), F.lit(1)).otherwise(F.lit(0)) for b in bounds
+    ]
+    bucket = sum(terms, F.lit(0)).cast("long")
+    hist = dict(df.groupBy(bucket.alias(_PID)).count().collect())
+    if sum(hist.values()) != probe["n"]:
+        raise ConservationError(
+            f"bucket histogram holds {sum(hist.values())} rows, "
+            f"probe saw {probe['n']}"
+        )
+    counts = (hist.get(b, 0) for b in range(len(bounds) + 1))
+    return bucket, list(accumulate(counts, initial=0))
+
+
+def bucket_ordinal(
+    df: DataFrame,
+    bucket: Column,
+    offsets: list[int],
+    cols: list[Column],
+    name: str,
+    keep: list[int] | None = None,
+) -> DataFrame:
+    """Global rank ``name`` of the rows of ``df`` from ``quantile_buckets``'
+    ``(bucket, offsets)``: the local rank within its bucket by ``cols``
+    plus the bucket's driver-side offset as a literal array element — one
+    hash exchange on the bucket, no join. ``keep`` ranks only the rows of
+    those buckets (filtered before the exchange); they still get their
+    global ranks."""
+    tagged = df.withColumn(_PID, bucket)
+    if keep is not None:
+        tagged = tagged.filter(F.col(_PID).isin(keep))
+    local = Window.partitionBy(_PID).orderBy(*cols)
+    off = F.element_at(
+        F.array(*[F.lit(o) for o in offsets]), (F.col(_PID) + 1).cast("int")
+    )
+    return tagged.withColumn(
+        name, (F.row_number().over(local) - 1 + off).cast("long")
+    ).drop(_PID)
+
+
+def _leading_key(df: DataFrame, order_by: list[ColumnOrName], types) -> str | None:
+    """Name of the LEADING order column if it is a named column of one of
+    ``types`` (works for compound keys too: bucketing on the first column
+    is a coarser monotone function of the lexicographic key — equal
+    leading values share a bucket, and the local window orders by the
+    full key)."""
     if not order_by or not isinstance(order_by[0], str):
         return None
     name = order_by[0]
@@ -119,7 +247,7 @@ def _leading_numeric_key(df: DataFrame, order_by: list[ColumnOrName]) -> str | N
         dtype = df.schema[name].dataType
     except KeyError:
         return None
-    return name if isinstance(dtype, _NUMERIC) else None
+    return name if isinstance(dtype, types) else None
 
 
 def with_ordinal(
@@ -134,19 +262,21 @@ def with_ordinal(
     """Attach a dense 0..n-1 LongType ordinal ``name`` ordered by ``order_by``.
 
     strategy: "auto" probes a single integer-like key for DENSITY first
-    (min/max/count agg on the pruned key column — one cheap pass): a dense
-    key means ``name = key - min`` is a pure narrow map and the big side
-    NEVER shuffles — the dominant case for well-formed ids (event_id,
+    (min/max/count in one single-stage job on the pruned key column): a
+    dense key means ``name = key - min`` is a pure narrow map and the big
+    side NEVER shuffles — the dominant case for well-formed ids (event_id,
     doc_id, a previous __idx before filtering). Non-dense integer keys use
     "bucket"; compound/non-numeric keys use "range". "window" (global
-    row_number — single-task sort) exists for tests/cross-checks only.
+    row_number — single-task sort) exists for tests/cross-checks only. An
+    input whose analysed plan is nondeterministic always takes the
+    persisted sampled range path, so every job ranks the same rows.
 
-    The density-probe memo assumes source data is IMMUTABLE within a
-    session for a given plan: the cache key combines the analyzed plan's
-    semanticHash with the relation's input-file snapshot, so re-reading a
-    path after an append/overwrite (a new file listing) misses the memo,
-    but mutating files in place behind a live DataFrame is undefined —
-    pass ``memoize=False`` to force a fresh probe.
+    The probe memo assumes source data is IMMUTABLE within a session for a
+    given plan: the cache key combines the analyzed plan's semanticHash
+    with the relation's input-file snapshot, so re-reading a path after an
+    append/overwrite (a new file listing) misses the memo, but mutating
+    files in place behind a live DataFrame is undefined — pass
+    ``memoize=False`` to force a fresh probe.
     """
     order_by = list(order_by)
     cols = _cols(order_by)
@@ -156,165 +286,80 @@ def with_ordinal(
     if strategy == "window":
         w = Window.partitionBy(F.pmod(F.spark_partition_id(), F.lit(1))).orderBy(*cols)
         return df.withColumn(name, (F.row_number().over(w) - 1).cast("long"))
+    if strategy not in ("auto", "bucket", "range"):
+        raise ValueError(f"unknown strategy {strategy!r}")
+    if not is_deterministic(df):
+        strategy, order_by = "range", cols  # Column keys: sampled path
 
     if strategy == "auto":
-        key = _leading_numeric_key(df, order_by)
-        if key is not None:
-            if len(order_by) == 1:
-                # single-key density probe: dense → ordinal is a pure map.
-                # Memoised per (analyzed plan semanticHash, file snapshot)
-                # so chained ops don't re-run the eager key-column scan,
-                # while a changed file listing invalidates naturally.
-                ck = (
-                    df._jdf.queryExecution().analyzed().semanticHash(),
-                    hash(tuple(sorted(df.inputFiles()))),
-                    key,
+        key = _leading_key(df, order_by, _NUMERIC)
+        if key is not None and len(order_by) == 1:
+            def density():
+                p = eager_aggregate(
+                    df.select(key),
+                    F.min(key).alias("lo"),
+                    F.max(key).alias("hi"),
+                    F.count(key).alias("n"),
+                    F.count(F.lit(1)).alias("rows"),
                 )
-                hit = _PROBE_CACHE.get(ck) if memoize else None
-                if hit is None:
-                    probe = df.agg(
-                        F.min(key).alias("lo"),
-                        F.max(key).alias("hi"),
-                        F.count(key).alias("n"),
-                    ).first()
-                    n = int(probe["n"])
-                    lo = int(probe["lo"]) if n else 0
-                    dense = n > 0 and int(probe["hi"]) - lo + 1 == n
-                    if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-                        _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-                    hit = _PROBE_CACHE[ck] = (lo, n, dense)
-                lo, n, dense = hit
-                if n == 0:
-                    return df.withColumn(name, F.lit(0).cast("long"))
-                if dense:
-                    return df.withColumn(
-                        name,
-                        (F.col(key).cast("long") - F.lit(lo)).cast("long"),
-                    )
-            strategy = "bucket"
-        else:
-            strategy = "range"
+                n, lo = p["n"], p["lo"] or 0
+                return lo, p["rows"], 0 < n == p["rows"] and p["hi"] - lo + 1 == n
+
+            lo, rows, dense = _memo(df, key, density, memoize)
+            if rows == 0:
+                return df.withColumn(name, F.lit(0).cast("long"))
+            if dense:
+                return df.withColumn(
+                    name, (F.col(key).cast("long") - F.lit(lo)).cast("long")
+                )
+        strategy = "range" if key is None else "bucket"
 
     if strategy == "bucket":
-        key = _leading_numeric_key(df, order_by)
+        key = _leading_key(df, order_by, _NUMERIC)
         if key is None:
             raise ValueError("bucket strategy needs a leading integer-like key")
+        # null keys sort first: they take the lowest bucket id instead of a
+        # null one, which the offsets join would drop
         bucket = F.floor(F.col(key).cast("long") / F.lit(bucket_width)).cast("long")
-        tagged = df.withColumn(_PID, bucket)
-    elif strategy == "range":
-        spark = df.sparkSession
-        n = num_partitions or max(spark.sparkContext.defaultParallelism, 2)
-        # Deterministic quantile-bounds path (r16, guide §2.5/§5): when
-        # the LEADING order key is a named numeric column ordered
-        # ascending, bucket boundaries come from ONE eager
-        # approxQuantile probe over the pruned key column and are
-        # frozen into the plan as literals — the bucket assignment is
-        # then a pure deterministic row function, so NO persist is
-        # needed for retry/rematerialisation consistency (the old
-        # repartitionByRange path had to pin its nondeterministic
-        # SAMPLE with a corpus-scale MEMORY_AND_DISK persist — exactly
-        # the cache-pressure §5 warns about at 100 TB, rebuilt per
-        # timed run since the r16 bench de-gaming). Monotone-coarsening
-        # correctness: bucket = #bounds <= key is non-strictly
-        # monotone in the key's sort order (Spark semantics give
-        # null → empty filter → bucket 0, matching asc-nulls-first,
-        # and NaN >= every bound → last bucket, matching asc-NaN-last);
-        # the local window then orders by the FULL key within each
-        # bucket, so boundary placement affects only balance, never
-        # values. Skewed/degenerate distributions cost balance, not
-        # correctness. Non-numeric or descending leading keys keep the
-        # sampled+persisted path below.
-        qkey = None
-        if isinstance(order_by[0], str):
-            try:
-                if isinstance(df.schema[order_by[0]].dataType, _QNUMERIC):
-                    qkey = order_by[0]
-            except KeyError:
-                qkey = None
-        bounds = None
-        if qkey is not None:
-            bk = (
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                hash(tuple(sorted(df.inputFiles()))),
-                "qbounds",
-                qkey,
-                n,
-            )
-            bounds = _PROBE_CACHE.get(bk) if memoize else None
-            if bounds is None:
-                # percentile_approx (codegen agg) measured ~2x faster
-                # than DataFrame.stat.approxQuantile's RDD path for the
-                # same sketch; accuracy 1000 bounds the sketch size
-                # (balance-only — boundary placement never affects
-                # values). Nulls are ignored by the sketch; NaNs are
-                # dropped from the bounds below (a NaN bound would act
-                # as +inf anyway).
-                probs = F.array(*[F.lit(i / n) for i in range(1, n)])
-                row = df.agg(
-                    F.percentile_approx(
-                        F.col(qkey).cast("double"), probs, F.lit(1000)
-                    ).alias("__b")
-                ).first()
-                raw = row["__b"] or []
-                bounds = sorted({b for b in raw if b is not None and b == b})
-                if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-                    _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-                _PROBE_CACHE[bk] = bounds
-        if bounds:
-            # bucket = #bounds <= key, as a plain comparison-sum chain:
-            # a filter() higher-order function here trips an optimizer
-            # INTERNAL_ERROR_ATTRIBUTE_NOT_FOUND when the lambda-bearing
-            # grouping expression is collapsed into the downstream
-            # aggregate (observed Spark 4.1); per-term when() keeps the
-            # whole bucket expression codegen-able scalar arithmetic.
-            # null key: every term's otherwise(0) fires -> bucket 0
-            # (asc-nulls-first); NaN: >= every bound -> last bucket
-            # (asc-NaN-last).
-            kd = F.col(qkey).cast("double")
-            terms = [
-                F.when(kd >= F.lit(float(b)), F.lit(1)).otherwise(F.lit(0))
-                for b in bounds
-            ]
-            bucket = sum(terms[1:], terms[0]).cast("long")
-            tagged = df.withColumn(_PID, bucket)
-        else:
-            # sampled range partitioning, pinned by a persist: the
-            # sample is nondeterministic, so every materialisation of
-            # an unpersisted plan could assign different buckets.
-            # Memoised per logical plan: re-running the same query
-            # (chained ops; NOT timed bench runs, which flush this
-            # first — r16 de-gaming) must reuse the SAME persisted
-            # DataFrame — re-persisting an identical plan just trips
-            # CacheManager's "already cached" warning and grows
-            # _PERSISTED.
-            rk = (
-                df._jdf.queryExecution().analyzed().semanticHash(),
-                hash(tuple(sorted(df.inputFiles()))),
-                tuple(str(c) for c in cols),
-                n,
-            )
-            tagged = _RANGE_CACHE.get(rk)
-            if tagged is None:
-                tagged = (
-                    df.repartitionByRange(n, *cols)
-                    .withColumn(_PID, F.spark_partition_id())
-                    .persist(StorageLevel.MEMORY_AND_DISK)
-                )
-                _RANGE_CACHE[rk] = tagged
-                _PERSISTED.append(tagged)
+        tagged = df.withColumn(_PID, F.coalesce(bucket, F.lit(-(1 << 63))))
     else:
-        raise ValueError(f"unknown strategy {strategy!r}")
+        n = num_partitions or max(df.sparkSession.sparkContext.defaultParallelism, 2)
+        qkey = _leading_key(df, order_by, _QNUMERIC)
+        if qkey is not None:
+            # the frozen bucket expression is a pure row function, so no
+            # persist is needed for retry/rematerialisation consistency;
+            # the local window orders by the FULL key within each bucket.
+            bucket, offsets = _memo(
+                df, ("qb", qkey, n), lambda: quantile_buckets(df, qkey, n), memoize
+            )
+            return bucket_ordinal(df, bucket, offsets, cols, name)
+        # sampled range partitioning, pinned by a persist: the sample is
+        # nondeterministic, so every materialisation of an unpersisted plan
+        # could assign different buckets. Memoised per logical plan so
+        # re-running the same plan reuses ONE persisted DataFrame instead of
+        # tripping CacheManager's "already cached" warning.
+        rk = _plan_key(df) + (tuple(str(c) for c in cols), n)
+        tagged = _RANGE_CACHE.get(rk)
+        if tagged is None:
+            tagged = (
+                df.repartitionByRange(n, *cols)
+                .withColumn(_PID, F.spark_partition_id())
+                .persist(StorageLevel.MEMORY_AND_DISK)
+            )
+            _RANGE_CACHE[rk] = tagged
+            _PERSISTED.append(tagged)
 
     counts = tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("__cnt"))
     # The offsets cumulative sum is a GLOBAL window by design — but only
     # over the tiny per-bucket counts table (one row per bucket/partition).
     # The explicit single-partition key silences WindowExec's "No Partition
     # Defined" warning so it stays a signal for REAL accidental global
-    # windows. pmod(spark_partition_id(), 1) is always 0 but non-foldable
-    # (a plain lit(0) is constant-folded out of the partition spec and the
-    # warning returns).
+    # windows. pmod(bucket id, 1) is always 0 (ids are never null) but
+    # neither foldable (a plain lit(0) or x * 0 is folded out of the
+    # partition spec and the warning returns) nor nondeterministic, so a
+    # ranked output still counts as deterministic.
     w_off = (
-        Window.partitionBy(F.pmod(F.spark_partition_id(), F.lit(1)))
+        Window.partitionBy(F.pmod(F.col(_PID), F.lit(1)))
         .orderBy(_PID)
         .rowsBetween(Window.unboundedPreceding, -1)
     )

@@ -281,8 +281,8 @@ def conversion_latency(
     )
     base = lat.agg(
         F.count(F.lit(1)).cast("long").alias("n_converted"),
-        F.round(
-            (F.sum("__lat") / F.count(F.lit(1))) / F.lit(1e6), 6
+        stats.round6_scaled(
+            (F.sum("__lat") / F.count(F.lit(1))) / F.lit(1e6)
         ).alias("avg_latency_s"),
     )
     names = [f"p{int(p * 100)}_latency_s" for p in percentiles]
@@ -290,7 +290,7 @@ def conversion_latency(
         lat, F.col("__lat").cast("double"), list(percentiles), names
     )
     pct = pct.select(
-        *[F.round(F.col(nm) / F.lit(1e6), 6).alias(nm) for nm in names]
+        *[stats.round6_scaled(F.col(nm) / F.lit(1e6)).alias(nm) for nm in names]
     )
     # both sides are 1-row aggregates — the scalar-broadcast cross join
     return base.crossJoin(F.broadcast(pct))

@@ -65,7 +65,7 @@ def run_to_memory(
     """Execute a streaming query to completion against an in-memory sink
     and return the materialised result table.
 
-    ``skip_no_data_batch`` (r16, VERDICT r15 #5): after the data
+    ``skip_no_data_batch``: after the data
     batches, a bounded replay pays one ZERO-input micro-batch whose
     only job is advancing the watermark — profiled at 2.65 s of the
     stream_stream_join gate's 8.0 s processAllAvailable (state-store
@@ -88,7 +88,7 @@ def run_to_memory(
     prev = spark.conf.get(conf_key, None)
     prev_parts = spark.conf.get(part_key, None)
     spark.conf.set(conf_key, "false" if skip_no_data_batch else "true")
-    # SPARK_GRAFT_STREAM_STATE_PARTITIONS (r16): a stateful streaming
+    # SPARK_GRAFT_STREAM_STATE_PARTITIONS: a stateful streaming
     # query's STATE partition count is frozen at first start from the
     # session's shuffle partitions, and every micro-batch pays a fixed
     # per-store commit cost (stores x partitions files). Profiled at
@@ -97,8 +97,8 @@ def run_to_memory(
     # right count is a STATE-VOLUME property (tiny bounded replays
     # want few partitions; 100 TB state wants many), so it is an
     # explicit knob, NOT a changed default — the default stays the
-    # session's shuffle partitions so the driver's core-count scaling
-    # bench measures the same shapes.
+    # session's shuffle partitions so core-count scaling runs measure
+    # the same shapes. The override lasts for this replay only.
     env_parts = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
     if env_parts:
         spark.conf.set(part_key, env_parts)
@@ -119,7 +119,9 @@ def run_to_memory(
             spark.conf.unset(conf_key)
         else:
             spark.conf.set(conf_key, prev)
-        if env_parts and prev_parts is not None:
+        if env_parts and prev_parts is None:
+            spark.conf.unset(part_key)
+        elif env_parts:
             spark.conf.set(part_key, prev_parts)
     return stream_df.sparkSession.table(name)
 

@@ -1,5 +1,8 @@
 """with_ordinal strategy equivalence + determinism."""
 
+import math
+
+import pytest
 from pyspark.sql import functions as F
 
 from semantic_cpp_spark.indexing import IDX, normalize_index, rebase_index, with_ordinal
@@ -70,7 +73,7 @@ def test_dense_key_fast_path(spark):
 
 
 def test_range_quantile_bounds_path(spark):
-    """r16: a named ASC numeric leading key takes the deterministic
+    """A named ASC numeric leading key takes the deterministic
     quantile-bounds range path — literal boundaries, no persist — and
     must agree with the window ground truth on doubles with duplicates,
     nulls (first) and NaN (last), with string tiebreaks ordered within
@@ -135,3 +138,157 @@ def test_range_quantile_bounds_deterministic(spark):
     release_ordinal_caches()
     b = {r["tie"]: r[IDX] for r in with_ordinal(df, ["k", "tie"], strategy="range").collect()}
     assert a == b
+
+
+def _nan_eq(a, b):
+    if isinstance(a, float) and isinstance(b, float):
+        return (math.isnan(a) and math.isnan(b)) or math.isclose(a, b, rel_tol=1e-12)
+    return a == b
+
+
+def _degenerate_inputs(spark):
+    """(name, DataFrame with a double key ``k`` and a unique ``tie``)."""
+    nan = float("nan")
+    cases = {
+        "empty": [],
+        "all_null": [None] * 40,
+        "nan_null_mixed": [nan, None, 2.5, nan, -1.0, None, 2.5, 7.0, nan, 0.0] * 8,
+        "constant": [4.25] * 60,
+        "ninety_pct_one_value": [1.0] * 90 + [float(i) for i in range(10)],
+    }
+    for name, vals in cases.items():
+        rows = [(v, i) for i, v in enumerate(vals)]
+        yield name, spark.createDataFrame(rows, "k double, tie long")
+
+
+def test_quantile_range_path_degenerate_inputs(spark):
+    """The quantile-bucket range path agrees with the window ground truth
+    on empty, all-null, NaN/null-mixed, constant and 90%-one-value keys."""
+    for name, df in _degenerate_inputs(spark):
+        got = {
+            r["tie"]: r[IDX]
+            for r in with_ordinal(df, ["k", "tie"], strategy="range").collect()
+        }
+        expect = {
+            r["tie"]: r[IDX]
+            for r in with_ordinal(df, ["k", "tie"], strategy="window").collect()
+        }
+        assert got == expect, name
+
+
+def test_quantile_percentiles_degenerate_inputs(spark):
+    """percentiles_exact_sorted equals F.percentile on the same
+    degenerate inputs (null when nothing is left after dropping nulls)."""
+    from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
+
+    ps = [0.0, 0.1, 0.5, 0.9, 1.0]
+    names = [f"p{i}" for i in range(len(ps))]
+    for name, df in _degenerate_inputs(spark):
+        got = percentiles_exact_sorted(df, F.col("k"), ps, names).collect()[0]
+        expect = df.agg(
+            *[F.percentile("k", F.lit(p)).alias(nm) for p, nm in zip(ps, names)]
+        ).collect()[0]
+        for nm in names:
+            assert _nan_eq(got[nm], expect[nm]), (name, nm, got[nm], expect[nm])
+
+
+def test_integer_keys_with_nulls_keep_every_row(spark):
+    """A null integer key sorts first and keeps its row on the auto
+    density probe and the bucket strategy (a null bucket id would be
+    dropped by the offsets join; null keys are never 'dense')."""
+    rows = [(k, i) for i, k in enumerate([0, 1, None, 2, None, 3])]
+    sparse = [(k * 100000 if k is not None else None, i) for k, i in rows]
+    for data in (rows, sparse):
+        df = spark.createDataFrame(data, "k long, tie long")
+        expect = {
+            r["tie"]: r[IDX]
+            for r in with_ordinal(df, ["k", "tie"], strategy="window").collect()
+        }
+        for strategy in ("auto", "bucket"):
+            got = {
+                r["tie"]: r[IDX]
+                for r in with_ordinal(
+                    df, ["k", "tie"], strategy=strategy, memoize=False
+                ).collect()
+            }
+            assert got == expect, (strategy, data)
+        single = with_ordinal(df.select("k"), ["k"], memoize=False).collect()
+        assert sorted(r[IDX] for r in single) == list(range(6))
+
+
+def test_nondeterministic_input_gets_dense_ordinals(spark):
+    """A nondeterministic plan takes the persisted sampled path, so the
+    probe, counts and ranks all see one evaluation; percentiles fall back
+    to the full-ordinal path over the same pinned rows."""
+    from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
+
+    df = spark.range(3000).select(F.rand(11).alias("k"), F.col("id").alias("tie"))
+    for strategy in ("auto", "range"):
+        out = with_ordinal(df, ["k"], strategy=strategy)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan, strategy
+        rows = sorted(out.collect(), key=lambda r: r[IDX])
+        assert [r[IDX] for r in rows] == list(range(3000))
+        assert [r["k"] for r in rows] == sorted(r["k"] for r in rows)
+    # rand() * 0 keeps the values fixed but the plan nondeterministic
+    nd = spark.range(101).select((F.col("id") + F.rand(5) * 0).alias("v"))
+    got = percentiles_exact_sorted(nd, F.col("v"), [0.5, 0.25], ["m", "q"]).first()
+    assert (got["m"], got["q"]) == (50.0, 25.0)
+
+
+def test_conservation_failure_never_passes_silently(spark, monkeypatch):
+    """A bucket histogram that does not sum to the probed count makes the
+    range path raise and percentiles fall back to the full-ordinal path."""
+    from semantic_cpp_spark import indexing
+    from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
+
+    real = indexing.eager_aggregate
+
+    def off_by_one(df, *aggs):
+        out = dict(real(df, *aggs))
+        out["n"] += 1
+        return out
+
+    monkeypatch.setattr(indexing, "eager_aggregate", off_by_one)
+    df = spark.range(500).select(
+        (F.col("id") * 0.5).alias("k"), F.col("id").alias("tie")
+    )
+    with pytest.raises(indexing.ConservationError):
+        with_ordinal(df, ["k", "tie"], strategy="range", memoize=False)
+    got = percentiles_exact_sorted(df, F.col("k"), [0.5, 0.9], ["m", "p"]).first()
+    expect = df.agg(
+        F.percentile("k", F.lit(0.5)).alias("m"),
+        F.percentile("k", F.lit(0.9)).alias("p"),
+    ).first()
+    assert _nan_eq(got["m"], expect["m"]) and _nan_eq(got["p"], expect["p"])
+
+
+def test_quantile_path_job_and_plan_pins(spark):
+    """Status-store pin: on an uncached input a percentiles_exact_sorted
+    build submits at most 3 jobs (one single-stage probe, the histogram's
+    map and result jobs), and the quantile-path with_ordinal plan ranks
+    with literal offsets — no broadcast of an offsets table."""
+    import uuid
+
+    from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
+
+    sc = spark.sparkContext
+    df = spark.range(20000).select(
+        (F.col("id") * 7919 % 20000 * 0.5).alias("k"), F.col("id").alias("tie")
+    )
+    group = f"pin_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "percentiles build")
+    try:
+        percentiles_exact_sorted(df, F.col("k"), [0.5, 0.9], ["m", "p"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert 1 <= len(jobs) <= 3, jobs
+    plan = (
+        with_ordinal(df, ["k", "tie"], strategy="range")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastExchange" not in plan
+    assert "element_at" in plan

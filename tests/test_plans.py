@@ -253,15 +253,26 @@ def test_incremental_dedup_corpus_join_not_hinted(spark, qs):
 
 def test_conversion_latency_no_global_percentile_reducer(spark, qs):
     """evt_conversion_latency routes p50/p90 through the distributed
-    sort + rank-selection path: no `percentile(` aggregate (the
-    single-reducer shape), and the ordinal sort must be DISTRIBUTED —
-    either the r15 range exchange or the r16 quantile-bounds bucket
-    exchange (hash on the __sem_pid bucket), never a global
-    single-partition window."""
+    rank-selection path: no `percentile(` aggregate (the single-reducer
+    shape), and the rank sort must be DISTRIBUTED — a range exchange or a
+    hash exchange on the quantile bucket column — with no window over a
+    single partition (an empty or constant partition spec)."""
+    import re
+
     plan = _plan(qs["evt_conversion_latency"](spark, SF))
     low = plan.lower()
-    assert "rangepartitioning" in low or "__sem_pid" in low
+    assert (
+        "rangepartitioning" in low
+        or "hashpartitioning(__sem_pid" in low
+        or "hashpartitioning(__bk" in low
+    )
     assert "percentile(" not in plan
+    specs = re.findall(r"Window \[[^\]]*\], \[([^\]]*)\]", plan)
+    assert specs, "rank selection no longer windows within buckets"
+    assert all(spec.strip() for spec in specs), "window without a partition spec"
+    # pmod(x, 1) is the engine's constant partition key for the windows
+    # that run over one partition on purpose
+    assert "pmod(" not in low
 
 
 def test_chunk_overlap_zero_exchange(spark, qs):
@@ -942,9 +953,9 @@ def test_ngram_novelty_single_pass_no_broadcast(spark, qs):
 
 
 def test_lm_trigram_feeder_checkpoint_shape(spark):
-    """r16 (VERDICT r15 #6/#9): localCheckpointed feeders hide their
-    construction stage from consumer-plan pins, so pin the feeder
-    itself — the trigram TYPE table every LM marginal derives from
+    """localCheckpointed feeders hide their construction stage from
+    consumer-plan pins, so pin the feeder itself — the trigram TYPE
+    table every LM marginal derives from
     must be built from ONE corpus scan (a single parquet leaf feeding
     the explode chain into a partial-aggregated count), not one scan
     per marginal."""
@@ -956,9 +967,9 @@ def test_lm_trigram_feeder_checkpoint_shape(spark):
     feeders = []
     real = CDF.localCheckpoint
 
-    def grab(self, eager=True):
+    def grab(self, *args, **kwargs):
         feeders.append(self._jdf.queryExecution().executedPlan().toString())
-        return real(self, eager)
+        return real(self, *args, **kwargs)
 
     CDF.localCheckpoint = grab
     try:

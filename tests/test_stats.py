@@ -119,6 +119,46 @@ def test_percentiles_sorted_empty_and_validation(spark):
     assert out.columns == [] and out.count() == 1
 
 
+def test_latency_p90_matches_duckdb_rounding(spark):
+    """evt_conversion_latency's p90 on the sf0.01 seed-201 fixture: ranks
+    134/135 of 150 latencies interpolate to 717034429784.4999 µs in
+    DuckDB (lo·(1−d) + hi·d), which rounds to 717034.429784 s; the
+    lo + d·(hi−lo) form lands on …784.5 and rounds up. round6_scaled
+    rounds the way DuckDB does, including values whose shortest decimal
+    string ends in a 5 just above the true value."""
+    from semantic_cpp_spark.functions.stats import (
+        percentiles_exact_sorted,
+        round6_scaled,
+    )
+
+    lo, hi = 716416355280, 722597100325
+    vals = list(range(134)) + [lo, hi] + [hi + 1 + i for i in range(14)]
+    df = spark.createDataFrame([(v,) for v in vals], "lat long")
+    p90 = percentiles_exact_sorted(df, F.col("lat").cast("double"), [0.9], ["p90"])
+    out = p90.select(
+        F.col("p90"), round6_scaled(F.col("p90") / F.lit(1e6)).alias("s")
+    ).first()
+    assert out["p90"] == 717034429784.4999
+    assert out["s"] == 717034.429784
+    # 17102.8889555 is stored just below the half but prints as …9555:
+    # round(double, 6) rounds that string up, the scaled product
+    # (17102888955.499998) rounds down
+    row = spark.range(1).select(
+        F.round(F.lit(17102.8889555), 6).alias("r"),
+        round6_scaled(F.lit(17102.8889555)).alias("s"),
+        round6_scaled(F.lit(717034.4297844999)).alias("t"),
+    ).first()
+    assert (row["r"], row["s"]) == (17102.888956, 17102.888955)
+    assert row["t"] == 717034.429784
+    duckdb = pytest.importorskip("duckdb")
+    ref = duckdb.sql(
+        "SELECT round(quantile_cont(v::DOUBLE, 0.9) / 1e6, 6), "
+        "round(17102.8889555::DOUBLE, 6) FROM (SELECT unnest(?) AS v)",
+        params=[vals],
+    ).fetchone()
+    assert ref == (out["s"], row["s"])
+
+
 def test_approx_count_distinct_within_tolerance(spark):
     """The sketch path for profiling at scale: HLL++ estimate lands
     within its documented relative error on a known cardinality."""

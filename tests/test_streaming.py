@@ -64,6 +64,26 @@ def test_streaming_distinct_keys(spark):
     assert got == expect
 
 
+def test_state_partition_override_restores_session_conf(spark, monkeypatch):
+    """SPARK_GRAFT_STREAM_STATE_PARTITIONS only applies for the replay:
+    a shuffle-partition setting the session had is restored, and one it
+    never had is unset again rather than left at the override."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_PARTITIONS", "3")
+    try:
+        for before in ("5", None):
+            if before is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, before)
+            ev = ops.read_events_stream(spark, SF)
+            ops.run_to_memory(ops.streaming_distinct_keys(ev), "append")
+            assert spark.conf.get(key, None) == before
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_stateful_ops_across_micro_batches(spark, tmp_path):
     """State must carry across micro-batches: split events into 3 files,
     force one file per trigger, and check the final stateful results
