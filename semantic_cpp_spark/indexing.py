@@ -53,55 +53,60 @@ IDX = "__idx"
 _PID = "__sem_pid"
 _OFF = "__sem_off"
 
-# probe memo: (semanticHash, input-file-snapshot hash, tag) → probe result
-# (density (lo, n, dense) or quantile buckets). Chained re-basing ops would
-# otherwise re-run the eager probe at every plan-construction step.
-# semanticHash identifies the logical plan and the file-snapshot hash ties
-# it to the data listing, so a re-read after append/overwrite misses the
-# memo instead of serving stale results. Bounded FIFO so long sessions
-# can't grow it unboundedly.
-_PROBE_CACHE: dict[tuple, object] = {}
-_PROBE_CACHE_MAX = 512
+# The engine's one memo for plan-derived intermediates: (semanticHash,
+# input-file-snapshot hash, tag) → value. Values are eager probe results
+# (density, quantile buckets, dedup's hot-route flag) and lazily persisted
+# DataFrames (the sampled range partitioning, dedup's signatures,
+# eventflow's shared tables). semanticHash identifies the logical plan and
+# the file-snapshot hash ties it to the data listing, so a re-read after
+# append/overwrite misses the memo instead of serving stale results. Tags
+# are namespaced by their owner ("indexing.density", "dedup.signatures").
+# FIFO-bounded for probe values only: a persisted frame is never evicted,
+# because a lazy plan may still read it and re-sampling a range
+# partitioning would change its ordinals. release_ordinal_caches drops it.
+_MEMO: dict[tuple, object] = {}
+_MEMO_MAX = 512
 
-# range-strategy persists outstanding in this session. Their lifetime must
-# span every materialisation of the result plan — laziness makes the
-# "right" unpersist moment unknowable — so they are registered here and
-# callers flush them at natural boundaries.
-_PERSISTED: list = []
 
-# range-strategy persist memo: (semanticHash, file-snapshot hash, keys, n)
-# → the persisted range-partitioned DataFrame, so identical plans reuse one
-# cache entry instead of re-persisting per call.
-_RANGE_CACHE: dict = {}
+def _plan_key(df: DataFrame) -> tuple[int, int]:
+    return (
+        df._jdf.queryExecution().analyzed().semanticHash(),
+        hash(tuple(sorted(df.inputFiles()))),
+    )
 
-# other modules with plan-keyed persist memos (pipeline.dedup) register a
-# flush callback here so release_ordinal_caches clears the whole engine.
-_RELEASE_HOOKS: list = []
+
+def memo(df: DataFrame, tag, compute):
+    """``compute()`` memoised per (logical plan of ``df``, file snapshot,
+    ``tag``); released by ``release_ordinal_caches``."""
+    key = _plan_key(df) + (tag,)
+    hit = _MEMO.get(key)
+    if hit is None:
+        if len(_MEMO) >= _MEMO_MAX:
+            old = next(
+                (k for k, v in _MEMO.items() if not isinstance(v, DataFrame)), None
+            )
+            _MEMO.pop(old, None)
+        hit = _MEMO[key] = compute()
+    return hit
 
 
 def release_ordinal_caches() -> int:
-    """Unpersist every range-strategy input cached by with_ordinal; call
-    at session boundaries (bench teardown, test fixture finalizers). Any
-    later re-materialisation of a dependent plan recomputes the range
-    partitioning — results stay correct row-set-wise; only the (already
-    materialised) ordinal assignment must not be recomputed under a
-    changed sampling, which is why the flush belongs at boundaries."""
+    """Clear the memo and unpersist every DataFrame it holds; returns how
+    many were unpersisted. Call at session boundaries (bench runs, test
+    fixture finalizers): a dependent plan materialised later recomputes
+    its inputs, so the flush must not fall between the materialisations
+    of one ordinal assignment."""
+    frames = [v for v in _MEMO.values() if isinstance(v, DataFrame)]
+    _MEMO.clear()
     n = 0
-    while _PERSISTED:
-        df = _PERSISTED.pop()
+    for df in frames:
         try:
             df.unpersist()
             n += 1
         except Exception:
             pass
-    _RANGE_CACHE.clear()
-    _PROBE_CACHE.clear()
-    for hook in _RELEASE_HOOKS:
-        try:
-            hook()
-        except Exception:
-            pass
     return n
+
 
 _NUMERIC = (T.ByteType, T.ShortType, T.IntegerType, T.LongType)
 
@@ -120,25 +125,6 @@ class ConservationError(RuntimeError):
 
 def _cols(order_by: Iterable[ColumnOrName]) -> list[Column]:
     return [F.col(c) if isinstance(c, str) else c for c in order_by]
-
-
-def _plan_key(df: DataFrame) -> tuple[int, int]:
-    return (
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        hash(tuple(sorted(df.inputFiles()))),
-    )
-
-
-def _memo(df: DataFrame, tag, compute, memoize: bool = True):
-    """``compute()`` memoised in _PROBE_CACHE per (logical plan, file
-    snapshot, tag)."""
-    key = _plan_key(df) + (tag,)
-    hit = _PROBE_CACHE.get(key) if memoize else None
-    if hit is None:
-        if len(_PROBE_CACHE) >= _PROBE_CACHE_MAX:
-            _PROBE_CACHE.pop(next(iter(_PROBE_CACHE)))
-        hit = _PROBE_CACHE[key] = compute()
-    return hit
 
 
 def is_deterministic(df: DataFrame) -> bool:
@@ -257,7 +243,6 @@ def with_ordinal(
     strategy: str = "auto",
     num_partitions: int | None = None,
     bucket_width: int = 1 << 16,
-    memoize: bool = True,
 ) -> DataFrame:
     """Attach a dense 0..n-1 LongType ordinal ``name`` ordered by ``order_by``.
 
@@ -275,8 +260,8 @@ def with_ordinal(
     given plan: the cache key combines the analyzed plan's semanticHash
     with the relation's input-file snapshot, so re-reading a path after an
     append/overwrite (a new file listing) misses the memo, but mutating
-    files in place behind a live DataFrame is undefined — pass
-    ``memoize=False`` to force a fresh probe.
+    files in place behind a live DataFrame is undefined — call
+    ``release_ordinal_caches()`` to force a fresh probe.
     """
     order_by = list(order_by)
     cols = _cols(order_by)
@@ -305,7 +290,7 @@ def with_ordinal(
                 n, lo = p["n"], p["lo"] or 0
                 return lo, p["rows"], 0 < n == p["rows"] and p["hi"] - lo + 1 == n
 
-            lo, rows, dense = _memo(df, key, density, memoize)
+            lo, rows, dense = memo(df, ("indexing.density", key), density)
             if rows == 0:
                 return df.withColumn(name, F.lit(0).cast("long"))
             if dense:
@@ -329,8 +314,8 @@ def with_ordinal(
             # the frozen bucket expression is a pure row function, so no
             # persist is needed for retry/rematerialisation consistency;
             # the local window orders by the FULL key within each bucket.
-            bucket, offsets = _memo(
-                df, ("qb", qkey, n), lambda: quantile_buckets(df, qkey, n), memoize
+            bucket, offsets = memo(
+                df, ("indexing.qb", qkey, n), lambda: quantile_buckets(df, qkey, n)
             )
             return bucket_ordinal(df, bucket, offsets, cols, name)
         # sampled range partitioning, pinned by a persist: the sample is
@@ -338,16 +323,13 @@ def with_ordinal(
         # could assign different buckets. Memoised per logical plan so
         # re-running the same plan reuses ONE persisted DataFrame instead of
         # tripping CacheManager's "already cached" warning.
-        rk = _plan_key(df) + (tuple(str(c) for c in cols), n)
-        tagged = _RANGE_CACHE.get(rk)
-        if tagged is None:
-            tagged = (
-                df.repartitionByRange(n, *cols)
-                .withColumn(_PID, F.spark_partition_id())
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            _RANGE_CACHE[rk] = tagged
-            _PERSISTED.append(tagged)
+        tagged = memo(
+            df,
+            ("indexing.range", tuple(str(c) for c in cols), n),
+            lambda: df.repartitionByRange(n, *cols)
+            .withColumn(_PID, F.spark_partition_id())
+            .persist(StorageLevel.MEMORY_AND_DISK),
+        )
 
     counts = tagged.groupBy(_PID).agg(F.count(F.lit(1)).alias("__cnt"))
     # The offsets cumulative sum is a GLOBAL window by design — but only

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from semantic_cpp_spark.indexing import memo
+
 
 def sessionize(
     df: DataFrame,
@@ -211,42 +213,12 @@ def merge_intervals(
     )
 
 
-# plan-keyed persisted-intermediate memo (flushed by
-# indexing.release_ordinal_caches via the shared release hook — the same
-# lifecycle as dedup's signature cache): conversion_latency and
-# rfm_segments both feed one derived table into several downstream jobs
-# (counts, rank selections, 1-row aggregates); without a persist the
-# expensive upstream (funnel scan+shuffle / per-user rollup) re-executes
-# per job (self-review r6).
-_DF_MEMO: dict = {}
-
-
-def _flush_df_memo() -> None:
-    while _DF_MEMO:
-        _, df = _DF_MEMO.popitem()
-        try:
-            df.unpersist()
-        except Exception:
-            pass
-
-
-from semantic_cpp_spark.indexing import _RELEASE_HOOKS  # noqa: E402
-
-_RELEASE_HOOKS.append(_flush_df_memo)
-
-
 def _persisted(df: DataFrame) -> DataFrame:
-    # key includes the resolved input files, like dedup._persisted_signatures:
-    # appending files to a source directory leaves the plan's semanticHash
-    # unchanged, and a hash-only key would silently serve the old snapshot
-    key = (
-        df._jdf.queryExecution().analyzed().semanticHash(),
-        hash(tuple(sorted(df.inputFiles()))),
-    )
-    hit = _DF_MEMO.get(key)
-    if hit is None:
-        hit = _DF_MEMO[key] = df.persist()
-    return hit
+    # conversion_latency and rfm_segments feed one derived table into
+    # several jobs (counts, rank selections, 1-row aggregates); the persist
+    # keeps the upstream funnel scan+shuffle / per-user rollup from
+    # re-running per job, and the plan-keyed memo shares it across builds
+    return memo(df, "eventflow.persisted", df.persist)
 
 
 def conversion_latency(
@@ -314,9 +286,9 @@ def rfm_segments(
     — never an ntile() global window. The per-user table scales with
     user cardinality, so the cutoffs go through the distributed
     sort + rank-selection path (stats.percentiles_exact_sorted), not a
-    one-reducer `percentile` merge (self-review r6); the table is
-    persisted across the three percentile passes. Output (user_id,
-    recency_us, n_purchases, monetary, r_band, f_band, m_band)."""
+    one-reducer `percentile` merge; the table is persisted across the
+    three percentile passes. Output (user_id, recency_us, n_purchases,
+    monetary, r_band, f_band, m_band)."""
     p = df.filter(F.col("event_type") == purchase_type)
     per_user = p.groupBy(F.col(user).alias("user_id")).agg(
         F.max(tus).alias("__last"),

@@ -24,9 +24,8 @@ def spark():
         },
     )
     yield s
-    # Flush range-strategy persists + density-probe memos at the session
-    # boundary (advisor r2: release_ordinal_caches existed but nothing
-    # called it by default).
+    # Unpersist every memoised intermediate and clear the engine's
+    # plan-keyed memo at the session boundary.
     from semantic_cpp_spark.indexing import release_ordinal_caches
 
     release_ordinal_caches()

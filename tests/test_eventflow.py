@@ -339,39 +339,6 @@ def test_debounce_gap_boundary(spark):
     assert out == {0: True, 1: False, 2: True, 3: True, 4: True}
 
 
-def test_persisted_memo_sees_appended_files(spark, tmp_path):
-    """The persisted-intermediate memo must key on the resolved input
-    files, not just the plan hash: appending files to a source directory
-    leaves semanticHash unchanged, and a hash-only key would silently
-    serve the old snapshot (self-review r6 round 2)."""
-    src = str(tmp_path / "conv_src")
-    batch1 = [
-        (0, 1, 0, "signup", 0.0),
-        (1, 1, 10 * M, "view", 0.0),
-        (2, 1, 20 * M, "purchase", 0.0),
-    ]
-    schema = "event_id long, user_id long, tus long, event_type string, value double"
-    spark.createDataFrame(batch1, schema).coalesce(1).write.parquet(src)
-
-    def run():
-        df = spark.read.parquet(src)
-        return eventflow.conversion_latency(
-            df, ["signup", "view", "purchase"]
-        ).collect()[0]
-
-    assert run()["n_converted"] == 1
-    # second converted user arrives in an appended file
-    batch2 = [
-        (3, 2, 0, "signup", 0.0),
-        (4, 2, 5 * M, "view", 0.0),
-        (5, 2, 40 * M, "purchase", 0.0),
-    ]
-    spark.createDataFrame(batch2, schema).coalesce(1).write.mode(
-        "append"
-    ).parquet(src)
-    assert run()["n_converted"] == 2  # stale memo would still say 1
-
-
 def test_max_concurrency_sweep_line_hand_computed(spark):
     """Three users on day 0: u1 [0s,100s], u2 [50s,150s], u3 [140s,200s]
     → peak 2 (u1∩u2 and u2∩u3 overlap, never all three)."""

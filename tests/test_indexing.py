@@ -5,7 +5,18 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from semantic_cpp_spark.indexing import IDX, normalize_index, rebase_index, with_ordinal
+from semantic_cpp_spark import indexing
+from semantic_cpp_spark.indexing import (
+    IDX,
+    normalize_index,
+    rebase_index,
+    release_ordinal_caches,
+    with_ordinal,
+)
+from semantic_cpp_spark.operators import eventflow
+from semantic_cpp_spark.pipeline import dedup
+
+M = 1_000_000  # 1 second in microseconds
 
 
 def _mk(spark, n=1000):
@@ -129,8 +140,6 @@ def test_range_quantile_bounds_path(spark):
 def test_range_quantile_bounds_deterministic(spark):
     """two independent constructions produce identical ordinals (the
     boundaries are frozen literals, not a nondeterministic sample)."""
-    from semantic_cpp_spark.indexing import release_ordinal_caches
-
     df = spark.range(2000).select(
         (F.col("id") % 97 * 1.5).alias("k"), F.col("id").alias("tie")
     )
@@ -199,6 +208,7 @@ def test_integer_keys_with_nulls_keep_every_row(spark):
     rows = [(k, i) for i, k in enumerate([0, 1, None, 2, None, 3])]
     sparse = [(k * 100000 if k is not None else None, i) for k, i in rows]
     for data in (rows, sparse):
+        release_ordinal_caches()
         df = spark.createDataFrame(data, "k long, tie long")
         expect = {
             r["tie"]: r[IDX]
@@ -207,12 +217,10 @@ def test_integer_keys_with_nulls_keep_every_row(spark):
         for strategy in ("auto", "bucket"):
             got = {
                 r["tie"]: r[IDX]
-                for r in with_ordinal(
-                    df, ["k", "tie"], strategy=strategy, memoize=False
-                ).collect()
+                for r in with_ordinal(df, ["k", "tie"], strategy=strategy).collect()
             }
             assert got == expect, (strategy, data)
-        single = with_ordinal(df.select("k"), ["k"], memoize=False).collect()
+        single = with_ordinal(df.select("k"), ["k"]).collect()
         assert sorted(r[IDX] for r in single) == list(range(6))
 
 
@@ -239,7 +247,6 @@ def test_nondeterministic_input_gets_dense_ordinals(spark):
 def test_conservation_failure_never_passes_silently(spark, monkeypatch):
     """A bucket histogram that does not sum to the probed count makes the
     range path raise and percentiles fall back to the full-ordinal path."""
-    from semantic_cpp_spark import indexing
     from semantic_cpp_spark.functions.stats import percentiles_exact_sorted
 
     real = indexing.eager_aggregate
@@ -253,8 +260,9 @@ def test_conservation_failure_never_passes_silently(spark, monkeypatch):
     df = spark.range(500).select(
         (F.col("id") * 0.5).alias("k"), F.col("id").alias("tie")
     )
+    release_ordinal_caches()
     with pytest.raises(indexing.ConservationError):
-        with_ordinal(df, ["k", "tie"], strategy="range", memoize=False)
+        with_ordinal(df, ["k", "tie"], strategy="range")
     got = percentiles_exact_sorted(df, F.col("k"), [0.5, 0.9], ["m", "p"]).first()
     expect = df.agg(
         F.percentile("k", F.lit(0.5)).alias("m"),
@@ -292,3 +300,125 @@ def test_quantile_path_job_and_plan_pins(spark):
     )
     assert "BroadcastExchange" not in plan
     assert "element_at" in plan
+
+def test_ordinal_probe_memoised(spark):
+    """The auto-strategy density probe runs its eager aggregate once per
+    logical plan, not once per with_ordinal call."""
+    release_ordinal_caches()
+    df = spark.range(100).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+    with_ordinal(df, ["k"])
+    assert len(indexing._MEMO) == 1
+    ((_, n, dense),) = indexing._MEMO.values()
+    assert n == 100 and dense
+    # same plan again → still one entry (hit, no second probe job)
+    with_ordinal(df, ["k"])
+    assert len(indexing._MEMO) == 1
+    # a different plan gets its own entry
+    with_ordinal(df.filter("k >= 50"), ["k"])
+    assert len(indexing._MEMO) == 2
+
+
+def test_release_ordinal_caches_unpersists_every_memoised_frame(spark):
+    """One release for every persisted intermediate: a string-key range
+    ordinal, conversion_latency's latency table and minhash_lsh_pairs'
+    signature table are all unpersisted, counted, and dropped from the
+    memo."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    release_ordinal_caches()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+
+    strs = spark.createDataFrame([("b", 1), ("a", 2), ("c", 3)], "s string, v int")
+    out = with_ordinal(strs, ["s"], strategy="range")
+    assert [r["s"] for r in out.orderBy(IDX).collect()] == ["a", "b", "c"]
+    events = spark.createDataFrame(
+        [(0, 1, 0, "signup", 0.0), (1, 1, 10 * M, "purchase", 0.0)],
+        "event_id long, user_id long, tus long, event_type string, value double",
+    )
+    conv = eventflow.conversion_latency(events, ["signup", "purchase"]).first()
+    assert conv["n_converted"] == 1
+    docs = spark.createDataFrame(
+        [(0, "a b c d e f"), (1, "a b c d e f"), (2, "u v w x y z")],
+        "doc_id long, text string",
+    )
+    pairs = dedup.minhash_lsh_pairs(docs, F.col("text"), F.col("doc_id"))
+    assert [(r["d1"], r["d2"]) for r in pairs.collect()] == [(0, 1)]
+
+    assert not cache.isEmpty()
+    assert release_ordinal_caches() == 3
+    assert cache.isEmpty()
+    assert not indexing._MEMO
+
+
+_DOC = "the quick brown fox jumps over the lazy dog near the river bank today"
+
+# owner → (schema, first file, appended file, one build's result, result
+# before the append, result after it)
+_APPEND_CASES = {
+    # a second converted user arrives in the appended file
+    "eventflow": (
+        "event_id long, user_id long, tus long, event_type string, value double",
+        [(0, 1, 0, "signup", 0.0), (1, 1, 10 * M, "view", 0.0),
+         (2, 1, 20 * M, "purchase", 0.0)],
+        [(3, 2, 0, "signup", 0.0), (4, 2, 5 * M, "view", 0.0),
+         (5, 2, 40 * M, "purchase", 0.0)],
+        lambda df: eventflow.conversion_latency(
+            df, ["signup", "view", "purchase"]
+        ).first()["n_converted"],
+        1,
+        2,
+    ),
+    # a key between the first two arrives; memoised quantile offsets of
+    # the first snapshot would give two rows the same ordinal
+    "indexing": (
+        "k double",
+        [(1.0,), (3.0,)],
+        [(2.0,)],
+        lambda df: sorted((r["k"], r[IDX]) for r in with_ordinal(df, ["k"]).collect()),
+        [(1.0, 0), (3.0, 1)],
+        [(1.0, 0), (2.0, 1), (3.0, 2)],
+    ),
+    # a near-duplicate of doc 0 arrives in the appended file
+    "dedup": (
+        "doc_id long, text string",
+        [(0, _DOC), (1, "an unrelated document about parquet files and spark jobs")],
+        [(2, _DOC.replace("today", "tonight"))],
+        lambda df: sorted(
+            (r["d1"], r["d2"])
+            for r in dedup.minhash_lsh_pairs(df, F.col("text"), F.col("doc_id")).collect()
+        ),
+        [],
+        [(0, 2)],
+    ),
+}
+
+
+@pytest.mark.parametrize("owner", sorted(_APPEND_CASES))
+def test_persisted_memo_sees_appended_files(spark, tmp_path, owner):
+    """Builds over a re-read source see a file appended to it. The memo
+    keys on the resolved input files, not just the plan hash: the append
+    leaves semanticHash unchanged, and a hash-only key would serve a
+    stale memoised value (the range ordinal's offsets). Spark's write
+    path re-caches persisted frames over the path, which the eventflow
+    and dedup cases rely on as well."""
+    schema, first, appended, build, before, after = _APPEND_CASES[owner]
+    src = str(tmp_path / "src")
+    spark.createDataFrame(first, schema).coalesce(1).write.parquet(src)
+    assert build(spark.read.parquet(src)) == before
+    spark.createDataFrame(appended, schema).coalesce(1).write.mode("append").parquet(src)
+    assert build(spark.read.parquet(src)) == after
+
+
+def test_memo_eviction_keeps_persisted_frames(spark, monkeypatch):
+    """FIFO eviction at the memo bound drops probe results only: a
+    persisted range partitioning stays memoised (a lazy plan may still
+    read it) until release_ordinal_caches."""
+    release_ordinal_caches()
+    monkeypatch.setattr(indexing, "_MEMO_MAX", 2)
+    strs = spark.createDataFrame([("b", 1), ("a", 2)], "s string, v int")
+    with_ordinal(strs, ["s"], strategy="range")
+    (frame,) = indexing._MEMO.values()
+    for lo in range(3):
+        with_ordinal(spark.range(lo, 10).select(F.col("id").alias("k")), ["k"])
+    assert len(indexing._MEMO) == 2 and frame in indexing._MEMO.values()
+    assert release_ordinal_caches() == 1
