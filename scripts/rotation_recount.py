@@ -1,18 +1,16 @@
-"""Rotation recount: derive the next round's due list from the
-CORRECTNESS_r*.json driver artifacts instead of trusting registry
-comments (the standing instruction at registry._PRIORITY).
+"""Rotation recount: derive the next 50-query window's due list from the
+CORRECTNESS_r*.json artifacts of the external gate (the rule is stated
+at registry._PRIORITY).
 
-For every registered query: latest GREEN driver row (err unset or the
-deliberate rows-only 'no_oracle', and no explicit False match flag —
-the test_registry_contract vouching rule), or '-' if none. Then,
+For every registered query: latest GREEN row (err unset or the
+deliberate rows-only 'no_oracle', and no explicit False match flag),
+or '-' if none. Then,
 given the upcoming round number N, the policy buckets:
 
   DUE       latest green row <= N-5 (rows from N-4..N survive round N,
             so a query whose newest row is vintage N-5 falls out of the
             validity span unless refreshed in round N)
-  NO-ROW    registered but never driver-verified (rule-(b) candidates;
-            cross-checked against the contract test's
-            PRE_VERIFIED_AWAITING_WINDOW differential tier)
+  NO-ROW    registered but never driver-verified (rule-(b) candidates)
   OK        fresher than the deadline
 
 Usage: python scripts/rotation_recount.py [next_round_number] [--emit-priority]
@@ -84,12 +82,6 @@ def main() -> None:
     deadline = next_round - 5
     names = list(registry.queries())
     due, no_row, ok, latest = buckets(next_round)
-    try:
-        from tests.test_registry_contract import PRE_VERIFIED_AWAITING_WINDOW
-
-        tier = set(PRE_VERIFIED_AWAITING_WINDOW)
-    except Exception:
-        tier = set()
     print(f"# rotation recount for round r{next_round} "
           f"(deadline: latest row <= r{deadline})")
     print(f"registered: {len(names)}  with-row: "
@@ -112,17 +104,8 @@ def main() -> None:
     window = set(names[:50])
     print(f"\n== NO-ROW ({len(no_row)}) — rule-(b) first rows:")
     for n in no_row:
-        if n in window:
-            mark = "in CURRENT window — row incoming this round"
-        elif n in tier:
-            mark = "differential-tier"
-        else:
-            mark = "NO VOUCH — fix first"
-        print(f"  {n}  [{mark}]")
-    unvouched = [n for n in no_row if n not in tier and n not in window]
-    if unvouched:
-        print(f"\n!! {len(unvouched)} no-row queries lack a differential "
-              "vouch — the contract test should have caught this.")
+        mark = " [in CURRENT window — row incoming this round]" if n in window else ""
+        print(f"  {n}{mark}")
     total = len(due) + len(no_row)
     print(f"\nwindow math: {len(due)} due + {len(no_row)} first-rows = "
           f"{total} of 50 slots; {max(0, 50 - total)} spare for rule-(a) "

@@ -1,10 +1,12 @@
-"""Local replica of the driver's correctness gate.
+"""The correctness gate: every registry query against its DuckDB oracle.
 
 Runs every registry query on Spark and its oracle on DuckDB at the given
 sf dir, compares row count, column names, and values (sorted rows, columns
 sorted by name, exact match after canonicalisation; doubles compared to
-1e-9 relative as a diagnostic fallback so we can tell "tiny float drift"
-from "wrong answer").
+1e-6 as a diagnostic fallback so we can tell "tiny float drift"
+from "wrong answer"). ``mismatch`` is the one compare:
+tests/test_registry_contract.py runs it on every query at sf0.001 in the
+default pytest run; this CLI runs it at any scale.
 
 Usage: python scripts/verify_local.py [sf_dir] [name_filter]
 """
@@ -14,10 +16,11 @@ from __future__ import annotations
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 TABLES = [
     "region", "nation", "customer", "supplier", "part",
@@ -58,6 +61,39 @@ def close_enough(a, b):
     return True
 
 
+def connect(sf_dir):
+    """A DuckDB connection with one view per fixture table under ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(
+            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
+        )
+    return con
+
+
+def mismatch(con, sql, cols, rows):
+    """None when ``rows`` (named ``cols``) equal the result of the oracle
+    ``sql`` on ``con``, else why they differ: row count, column names, or
+    values (sorted rows, columns sorted by name, canonicalised)."""
+    res = con.execute(sql)
+    ocols = [d[0] for d in res.description]
+    orows = res.fetchall()
+    msgs = []
+    if len(rows) != len(orows):
+        msgs.append(f"rowcount {len(rows)} vs {len(orows)}")
+    if sorted(c.lower() for c in cols) != sorted(c.lower() for c in ocols):
+        msgs.append(f"schema {sorted(cols)} vs {sorted(ocols)}")
+    if not msgs:
+        sk, ok = rows_key(rows, cols), rows_key(orows, ocols)
+        if sk != ok:
+            if close_enough(sk, ok):
+                msgs.append("FLOAT-DRIFT (values within 1e-6 but hash differs)")
+            else:
+                diffs = [(a, b) for a, b in zip(sk, ok) if a != b][:3]
+                msgs.append(f"values differ, e.g. {diffs}")
+    return "; ".join(msgs) or None
+
+
 def main():
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     name_filter = sys.argv[2] if len(sys.argv) > 2 else ""
@@ -66,11 +102,7 @@ def main():
     from semantic_cpp_spark.session import get_spark
 
     spark = get_spark("verify_local")
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
+    con = connect(sf_dir)
 
     qs, oracles = e.queries(), e.oracle_sql()
     passed = failed = skipped = 0
@@ -91,30 +123,13 @@ def main():
             skipped += 1
             continue
         try:
-            res = con.execute(oracles[name])
-            ocols = [d[0] for d in res.description]
-            orows = res.fetchall()
+            msg = mismatch(con, oracles[name], scols, srows)
         except Exception as ex:
             print(f"FAIL {name}: duckdb error: {ex}", flush=True)
             failed += 1
             continue
-        msgs = []
-        if len(srows) != len(orows):
-            msgs.append(f"rowcount {len(srows)} vs {len(orows)}")
-        if sorted(c.lower() for c in scols) != sorted(c.lower() for c in ocols):
-            msgs.append(f"schema {sorted(scols)} vs {sorted(ocols)}")
-        if not msgs:
-            sk, ok = rows_key(srows, scols), rows_key(orows, ocols)
-            if sk != ok:
-                if close_enough(sk, ok):
-                    msgs.append("FLOAT-DRIFT (values within 1e-6 but hash differs)")
-                else:
-                    diffs = [
-                        (a, b) for a, b in zip(sk, ok) if a != b
-                    ][:3]
-                    msgs.append(f"values differ, e.g. {diffs}")
-        if msgs:
-            print(f"FAIL {name}: {'; '.join(msgs)}", flush=True)
+        if msg:
+            print(f"FAIL {name}: {msg}", flush=True)
             failed += 1
         else:
             print(f"PASS {name} ({len(srows)} rows, {time.time()-t0:.1f}s)", flush=True)

@@ -5098,15 +5098,8 @@ def txt_bpe_segment_kernel(spark, sf_dir):
     )
 
 
-# -- r13 GATE CANDIDATES (pre-verified, unregistered) -------------------------
-# The r12 window is full (46 r7-vintage refreshes + 4 policy slots), and
-# the registry contract requires every registered row-less query to hold
-# a window slot — so the r12 tokenizer additions ship as CANDIDATES:
-# Spark callable + DuckDB oracle both written and differentially
-# verified in pytest (tests/test_r13_gate_candidates.py runs them
-# side-by-side at sf0.001, the verify_local compare), and r13's rule-(b)
-# slots just add @register. Keep the pair adjacent so the wiring is a
-# two-line diff per gate.
+# -- tokenizer vocabulary, stats and encoding ---------------------------------
+# Each oracle SQL function sits next to the query it registers with.
 
 
 def _vocab_cte_parts(n: int, eow: str | None = None) -> list[str]:

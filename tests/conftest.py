@@ -33,10 +33,11 @@ def spark():
 
 # -- driver-budget core battery ---------------------------------------------
 # The full suite takes ~25-33 minutes, longer than a CI test gate can wait.
-# The default run is the CORE battery (plan pins, registry/driver contract,
-# batch==stream parity, ordinal machinery — the oracle-adjacent
-# invariants), sized well inside that budget. The full battery stays one
-# env var away and is the pre-commit gate:
+# The default run is the CORE battery (plan pins; the registry/driver
+# contract, which holds the oracle gate: every registered query against
+# its DuckDB oracle at sf0.001; batch==stream parity; ordinal machinery),
+# sized inside that budget. The full battery stays one env var away and is
+# the pre-commit gate:
 #
 #     SEM_FULL_TESTS=1 python -m pytest tests/ -q
 #

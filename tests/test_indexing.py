@@ -117,7 +117,7 @@ def test_range_quantile_bounds_path(spark):
         )
     ]
 
-    def _key(t):
+    def _null_nan_order(t):
         k = t[0]
         return (
             0 if k is None else (2 if k == "NaN" else 1),
@@ -126,7 +126,7 @@ def test_range_quantile_bounds_path(spark):
         )
 
     assert got == expect
-    assert got == sorted(got, key=_key)
+    assert got == sorted(got, key=_null_nan_order)
     # the quantile path must not persist anything (no range cache entry)
     plan = (
         with_ordinal(df, ["k", "tie"], strategy="range")

@@ -1,18 +1,37 @@
-"""Registry-contract pins: the driver's correctness gate verifies only the
-first 50 entries of ``queries()`` in insertion order, so window membership is
-a load-bearing property, not cosmetics. Also pins the oracle RESULT-TYPE
-contract: every oracle column must land in the type set the driver
-canonicalizes identically to Spark (the r6 ``samp_train_val_split`` failure
-was DuckDB ``sum(INTEGER)`` silently returning HUGEINT)."""
+"""Registry-contract pins and the oracle gate.
 
+The oracle gate runs every registered query at sf0.001 and compares it
+with its DuckDB oracle through ``scripts/verify_local.py``'s ``mismatch``.
+An external gate also verifies the first 50 entries of ``queries()`` in
+insertion order, so the rotation of that window stays pinned here. The
+oracle RESULT-TYPE contract pins every oracle column to the type set that
+canonicalises identically to Spark (DuckDB ``sum(INTEGER)`` silently
+returns HUGEINT)."""
+
+import importlib.util
 import json
 import os
 import pathlib
+import shutil
+import sys
 
-import duckdb
 import pytest
 
 from semantic_cpp_spark import registry
+from semantic_cpp_spark.indexing import release_ordinal_caches
+
+ROOT = pathlib.Path(__file__).resolve().parents[1]
+SF = "/root/testdata/sf0.001"
+
+
+def _load_script(path):
+    spec = importlib.util.spec_from_file_location(path.stem, path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+verify_local = _load_script(ROOT / "scripts" / "verify_local.py")
 
 # Queries that re-enter in round 17 on a behavioral/plan change —
 # each must sit inside this round's 50-slot driver window for a fresh
@@ -108,80 +127,14 @@ def test_priority_fills_the_window_exactly():
     )
 
 
-# Queries registered past the r13 window cut (the r14 forecast in
-# registry._PRIORITY's capacity plan): their correctness vouch, until
-# the r14 rotation hands them rule-(b) slots, is a DIFFERENTIAL
-# PYTEST that runs the Spark callable and the DuckDB oracle side by side
-# with the verify_local compare discipline. Any name listed here must
-# have such a test; test_awaiting_window_names_have_differential_tests
-# enforces the pairing so this set cannot silently become a skip list.
-PRE_VERIFIED_AWAITING_WINDOW = {
-    # (the seven r13-queued family gates got their first driver rows in
-    # the committed CORRECTNESS_r14.json and have left this set.)
-    # registered past the r14 cut, holding r15 rule-(b) slots:
-    "txt_lm_mkn_zipf": "tests/test_r15_gate_candidates.py",
-    "samp_dsir_logweights": "tests/test_r15_gate_candidates.py",
-    # r14 consolidation: carries the four str_ members' obligations
-    # (their r13 rows stay valid through r17; the family first row
-    # should land well before then)
-    "str_family": "tests/test_r15_gate_candidates.py",
-    # end-of-r14 consolidations (mm 3→1, passage 2→1): members' r13
-    # rows stay valid through r17; family first rows land r15.
-    "mm_media_family": "tests/test_r15_gate_candidates.py",
-    "dedup_passage_family": "tests/test_r15_gate_candidates.py",
-}
-
-
-def test_awaiting_window_names_have_differential_tests():
-    root = pathlib.Path(__file__).resolve().parents[1]
-    for name, test_path in PRE_VERIFIED_AWAITING_WINDOW.items():
-        body = (root / test_path).read_text()
-        assert name in body, (
-            f"{name} claims a differential vouch in {test_path} "
-            "but the file never references it"
-        )
-
-
-def test_no_registered_query_left_unverified():
-    """Every name in the registry must either hold a green historical driver
-    row (CORRECTNESS_r01..r06), sit inside this round's 50-slot window, or
-    carry a documented differential-pytest vouch while awaiting its first
-    rule-(b) slot (PRE_VERIFIED_AWAITING_WINDOW).
-    (The r6 overflow list is gone: all 20 entries now hold window slots.)"""
-    root = pathlib.Path(__file__).resolve().parents[1]
-    seen: set[str] = set()
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
-        for name, row in json.loads(p.read_text()).items():
-            # a row only vouches if it is GREEN (ADVICE r4): err unset and
-            # no explicit mismatch — rows-only rows carry null matches and
-            # still count, a red row must not. err="no_oracle" is the
-            # driver's deliberate rows-only recording for queries with no
-            # SQL-expressible oracle (emb_pca_project) — a weaker but
-            # by-design vouch, visible as such to the judge.
-            if row.get("err") in (None, "no_oracle") and not any(
-                row.get(k) is False
-                for k in ("rows_match", "schema_match", "hash_match")
-            ):
-                seen.add(name)
-    window = set(list(registry.queries())[:50])
-    orphans = [
-        n for n in registry.queries()
-        if n not in seen
-        and n not in window
-        and n not in PRE_VERIFIED_AWAITING_WINDOW
-    ]
-    assert not orphans, f"never driver-verified and outside window: {orphans}"
-
-
 def _latest_rows() -> tuple[dict[str, int], int]:
     """(latest recorded round per query, max recorded round) over ALL
     committed driver artifacts — any row counts for vintage purposes
     (staleness is about when the driver last LOOKED, not whether it
     passed; red rows force rule-(a) re-entry separately)."""
-    root = pathlib.Path(__file__).resolve().parents[1]
     latest: dict[str, int] = {}
     max_round = 0
-    for p in sorted(root.glob("CORRECTNESS_r*.json")):
+    for p in sorted(ROOT.glob("CORRECTNESS_r*.json")):
         rnd = int(p.stem.split("_r")[1])
         max_round = max(max_round, rnd)
         for name in json.loads(p.read_text()):
@@ -230,15 +183,7 @@ def test_rotation_recount_due_rule_matches_span5_invariant():
     unless refreshed. The r13 off-by-one (deadline N-4 instead of N-5)
     made the script also sweep in the still-valid N-3 cohort and report
     a phantom 42-slot overflow against the registry's own plan."""
-    import sys
-
-    root = pathlib.Path(__file__).resolve().parents[1]
-    sys.path.insert(0, str(root / "scripts"))
-    try:
-        import rotation_recount
-    finally:
-        sys.path.pop(0)
-
+    rotation_recount = _load_script(ROOT / "scripts" / "rotation_recount.py")
     latest, max_round = rotation_recount.latest_green_rows()
     next_round = max_round + 1
     due, no_row, ok, _ = rotation_recount.buckets(next_round)
@@ -286,28 +231,68 @@ _ALLOWED_ORACLE_TYPES = {
     "BIGINT", "INTEGER", "DOUBLE", "VARCHAR", "BOOLEAN", "DATE", "TIMESTAMP",
 }
 
-_SF_DIR = os.environ.get("SPARK_GRAFT_SF_SMALL", "/root/testdata/sf0.01")
+
+@pytest.fixture(scope="module")
+def duck():
+    if not os.path.isdir(SF):
+        pytest.skip("driver testdata not present")
+    con = verify_local.connect(SF)
+    yield con
+    con.close()
 
 
-@pytest.mark.skipif(
-    not os.path.isdir(_SF_DIR), reason="driver testdata not present"
-)
-def test_every_oracle_result_type_is_canonical():
-    con = duckdb.connect()
-    for t in (
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM "
-            f"read_parquet('{_SF_DIR}/{t}.parquet')"
-        )
+def test_every_oracle_result_type_is_canonical(duck):
     offenders = []
     for name, sql in registry.oracle_sql().items():
-        for col, typ, *_ in con.execute(f"DESCRIBE {sql}").fetchall():
+        for col, typ, *_ in duck.execute(f"DESCRIBE {sql}").fetchall():
             if typ not in _ALLOWED_ORACLE_TYPES:
                 offenders.append((name, col, typ))
     assert not offenders, (
         f"oracle result columns outside the canonical type set "
         f"(cast them, e.g. ::BIGINT): {offenders}"
     )
+
+
+# -- oracle gate ---------------------------------------------------------------
+# Distinct ``aspect`` values of each family union. A union that drops a
+# member aspect still matches its own oracle, so the gate also checks this
+# census, on the rows it has already collected.
+FAMILY_ASPECTS = {
+    "dedup_simhash_family": {"sig", "pair"},
+    "emb_semdedup_family": {"fixed", "scaled"},
+    "mm_decode_family": {"ahash", "histogram", "audio", "video", "tiff"},
+    "evt_rollup_merge_family": {"merge", "var", "hll", "quantile"},
+    "agg_sketch_cardinality": {"hll", "cms"},
+    "dedup_span_cuts_family": {"cuts", "apply", "text"},
+    "asof_nearest_family": {"nearest", "tol"},
+    "sim_pq_train_family": {"k16", "k256"},
+    "sim_ivfpq_family_topk": {"adc", "ivf", "residual"},
+}
+
+
+@pytest.mark.parametrize("name", list(registry.queries()))
+def test_query_matches_oracle(spark, duck, name):
+    release_ordinal_caches()
+    sdf = registry.queries()[name](spark, SF)
+    cols = sdf.columns
+    rows = [tuple(r) for r in sdf.collect()]
+    msg = verify_local.mismatch(duck, registry.oracle_sql()[name], cols, rows)
+    assert msg is None, msg
+    if name in FAMILY_ASPECTS:
+        aspect = cols.index("aspect")
+        assert {r[aspect] for r in rows} == FAMILY_ASPECTS[name]
+
+
+def test_verify_local_imports_its_own_checkout(tmp_path):
+    """Run from a copy, verify_local must put the copy's engine first on
+    sys.path, not whichever checkout happens to be installed."""
+    (tmp_path / "scripts").mkdir()
+    copy = tmp_path / "scripts" / "verify_local.py"
+    shutil.copy(ROOT / "scripts" / "verify_local.py", copy)
+    saved = list(sys.path)
+    try:
+        _load_script(copy)
+        first = sys.path[0]
+    finally:
+        sys.path[:] = saved
+    assert first == str(tmp_path.resolve())
